@@ -1,0 +1,10 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus drain, which Spark keeps package-private.
+  * The traced run drains the bus before it detaches its listeners, so no
+  * event of a traced operation is lost. */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+}
